@@ -26,6 +26,9 @@ Strategy choice at scale:
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from functools import cached_property
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -314,16 +317,10 @@ def upsert_partitioned(
     # budget. (A lakehouse table format does this swap transactionally;
     # this is the plain-parquet equivalent.)
     merged = upsert_anti_union(target, staging, key).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # per-write option, not the session conf: no other writer sees it
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(target_path)
     return spark.read.parquet(target_path).where(
         F.col(partition_col).isin(touched)
     )
@@ -465,18 +462,9 @@ def upsert_fileskip(
     the key, pinned by re-apply in tests. Returns the merged view of
     the touched buckets with ``touched_buckets`` attached."""
     manifest = spark.read.parquet(f"{target_path}/_manifest")
-    # touched buckets ride the staging checkpoint's Observation (r16)
-    # instead of a separate distinct-collect job; the merge below
-    # reads the checkpoint instead of recomputing the staging pipeline
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = (
-        assign_range_bucket(staging, manifest, key)
-        .observe(obs, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(int(b) for b in obs.get["b"])
+    # the merge below reads the staged checkpoint instead of
+    # recomputing the staging pipeline
+    assigned, touched = _stage(staging, manifest, key)
     target = spark.read.parquet(target_path).where(F.col("_kr").isin(touched))
     merged = upsert_anti_union(
         target, assigned.select(*target.columns), key
@@ -498,16 +486,11 @@ def upsert_fileskip(
     )
 
     def _write_data() -> None:
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("_kr").parquet(
-                target_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # a per-write option: this runs in a commit-pool thread, where
+        # flipping the session conf would race every other writer
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("_kr").parquet(target_path)
 
     _run_concurrent(m_collect, _write_data)
     m_publish()
@@ -1085,7 +1068,15 @@ def _local_fs_path(spark: SparkSession, path: str) -> str | None:
 
     u = urlparse(path)
     if u.scheme == "file":
-        return u.path
+        # the directory Hadoop's Path names: the text after the scheme
+        # and an empty authority, taken literally — no percent-decoding
+        # (``file:///a%20b`` is the directory ``a%20b``) and no
+        # query/fragment split. A host (``file://h/...``) is not
+        # provably local.
+        if u.netloc:
+            return None
+        rest = path[path.index(":") + 1:]
+        return rest[2:] if rest.startswith("//") else rest
     if u.scheme != "":
         return None
     default_fs = getattr(spark, "_sg_default_fs", None)
@@ -1707,44 +1698,30 @@ def _alter_schema_commit(
     """Commit a schema change as a structural version (restore-shaped:
     manifest and DV state carry forward VERBATIM — zero data reads or
     writes, O(manifest) like every metadata commit). Ordering: intent
-    marker -> DV copy -> ``.schema`` sidecar -> op tag (carrying
-    ``schema_change`` so _schema_as_of can reject orphan sidecars) ->
-    manifest copy (the commit point)."""
+    marker -> ``.schema`` sidecar -> DV and manifest copies -> op tag
+    (carrying ``schema_change`` so _schema_as_of can reject orphan
+    sidecars) -> manifest ``_SUCCESS`` (the commit point, _publish)."""
     import json as _json
 
     versions = _list_versions(spark, f"{path}/_manifest")
     if not versions:
         raise FileNotFoundError(f"alter schema: no table at {path}")
     v = versions[-1]
-    v_new = v + 1
-    _begin_commit(spark, path, v_new, writer or _unique_writer())
-    jvm, fs, _ = _fs(spark, path)
-    for stale in (
-        f"{path}/_dv/v={v_new}",
-        f"{path}/_manifest/v={v_new}.schema",
-    ):
-        sp = jvm.org.apache.hadoop.fs.Path(stale)
-        if fs.exists(sp):
-            fs.delete(sp, True)
-    dv = _read_dv(spark, path, v)
-    if dv is not None:  # verbatim carry: byte copy, no Spark job (r16)
-        _copy_dir(spark, f"{path}/_dv/v={v}", f"{path}/_dv/v={v_new}")
+    _begin_commit(spark, path, v + 1, writer or _unique_writer())
+    # own version slot: overwrite self-heals after a crashed attempt
     payload = {k: v2 for k, v2 in doc.items() if k != "since_version"}
     _write_small_file(
         spark,
-        f"{path}/_manifest/v={v_new}.schema",
+        f"{path}/_manifest/v={v + 1}.schema",
         _json.dumps(payload, sort_keys=True),
     )
-    _write_commit_op(
-        spark, path, v_new, "ALTER SCHEMA",
-        changed_buckets=[], schema_change=True, **op_params,
+    # metadata-only commit: DV and manifest carry forward verbatim as
+    # driver-side byte copies, not Spark read+rewrite jobs (r16)
+    return _publish(
+        spark, path, v, "ALTER SCHEMA", [],
+        dv=_dv_carry(spark, path, v, _read_dv(spark, path, v)),
+        schema_change=True, **op_params,
     )
-    # metadata-only commit: the manifest carries forward verbatim —
-    # a driver-side byte copy, not a Spark read+rewrite job (r16)
-    _copy_manifest_dir(
-        spark, f"{path}/_manifest/v={v}", f"{path}/_manifest/v={v_new}"
-    )
-    return v_new
 
 
 def rename_column(
@@ -2209,6 +2186,349 @@ def read_version_point(
     return out
 
 
+# ---------------------------------------------------------------------------
+# The versioned commit path, written once. Every committer below runs the
+# same four steps: open the tip (_open_tip), stage the batch (_stage), win
+# the next version's intent marker (_admit), and publish (_publish). Each
+# keeps only what makes it different: how it stages, which manifest rows
+# its generation replaces (_next_manifest), and what it does with the
+# deletion vector — carry it (_dv_carry), fold it (no DV at v+1), or union
+# new entries into it (_next_dv).
+# ---------------------------------------------------------------------------
+
+
+@dataclass
+class _Tip:
+    """The committed version a writer builds on: its number, manifest
+    (a driver-local LocalRelation, _read_manifest), column mapping, the
+    merge key's PHYSICAL name (r16 column mapping — files, DVs and
+    manifest stats all use it), and the stats/Bloom columns every commit
+    maintains. Disjoint admission (_admit) advances ``v`` and
+    ``manifest`` past the winners it commits over."""
+
+    v: int
+    manifest: DataFrame
+    sch: dict | None
+    key: str
+    stats_cols: list
+    point_cols: list
+
+    @cached_property
+    def bloom_bits(self) -> int:
+        """The table's Bloom width, fixed at bootstrap. Read on first
+        use: off the local filesystem the read is a Spark job, and a
+        commit that writes no new generation never needs it."""
+        if not self.point_cols:
+            return 0
+        return _bloom_bits_of(self.manifest, self.point_cols)
+
+
+def _open_tip(spark: SparkSession, path: str, key: str, what: str) -> _Tip:
+    """The table's latest committed version; FileNotFoundError when
+    ``path`` holds no versioned table."""
+    versions = _list_versions(spark, f"{path}/_manifest")
+    if not versions:
+        raise FileNotFoundError(
+            f"{what}: no table at {path} — bootstrap with "
+            "versioned_layout_write"
+        )
+    v = versions[-1]
+    manifest = _read_manifest(spark, path, v)
+    sch = _schema_as_of(spark, path, v)
+    return _Tip(
+        v=v,
+        manifest=manifest,
+        sch=sch,
+        key=_phys_name(sch, key),
+        stats_cols=_stats_cols_of(manifest),
+        point_cols=_point_cols_of(manifest),
+    )
+
+
+def _stage(rows: DataFrame, manifest: DataFrame, key: str):
+    """(staged, touched): ``rows`` with their key-range buckets,
+    checkpointed ONCE, and the sorted bucket set they touch. The set
+    rides the checkpoint as an Observation (r16, guide §1.2: one job,
+    not a checkpoint job plus a distinct-collect job), and everything
+    downstream reads the checkpoint instead of recomputing the staging
+    pipeline."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    staged = (
+        assign_range_bucket(rows, manifest, key)
+        .observe(obs, F.collect_set("_kr").alias("b"))
+        .localCheckpoint(eager=True)
+    )
+    return staged, sorted(int(b) for b in obs.get["b"])
+
+
+def _admit(
+    spark: SparkSession,
+    path: str,
+    tip: _Tip,
+    writer: str | None,
+    touched=(),
+    admit_disjoint: bool = False,
+) -> list[int]:
+    """Win the ``v+1`` intent marker (_begin_commit) — the conflict gate
+    BEFORE any write, so a loser never contaminates the winner's
+    generation directories. With ``admit_disjoint`` (r16, see
+    upsert_versioned_dv) a lost race waits for the winner and, when its
+    op is cutpoint-stable (MOR MERGE or DELETE) and its stamped change
+    set misses ``touched``, advances ``tip`` past it and tries the next
+    version. Returns the versions admitted over."""
+    writer = writer or _unique_writer()
+    admitted_over: list[int] = []
+    while True:
+        try:
+            _begin_commit(spark, path, tip.v + 1, writer)
+            return admitted_over
+        except ConcurrentWriteError:
+            if not admit_disjoint:
+                raise
+            if not _wait_for_commit(spark, path, tip.v + 1):
+                raise  # crashed holder: rebase/rollback path decides
+            win = _commit_op_payload(spark, path, tip.v + 1) or {}
+            op_name = win.get("operation")
+            tier = (win.get("parameters") or {}).get("tier")
+            cb = win.get("changed_buckets")
+            admissible = (
+                op_name == "DELETE" or (op_name == "MERGE" and tier == "mor")
+            )
+            if not admissible or cb is None or set(cb) & set(touched):
+                raise
+            admitted_over.append(tip.v + 1)
+            tip.v += 1
+            # the winner may have appended manifest rows in ITS buckets
+            tip.manifest = _read_manifest(spark, path, tip.v)
+
+
+def _fresh_generation(
+    df: DataFrame, gen: int, sch: dict | None = None
+) -> DataFrame:
+    """``df`` rewritten as generation ``gen``, materialized. With the
+    column mapping ``sch``, DROPped columns' retired physicals are
+    scrubbed (r16 — Delta's REORG column purge): time travel to
+    pre-drop versions still reads the OLD generations, which keep the
+    bytes until vacuum."""
+    retired = [c for c in (sch or {}).get("retired", []) if c in df.columns]
+    return (
+        df.drop("_gen", *retired)
+        .withColumn("_gen", F.lit(gen).cast("long"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _next_manifest(
+    tip: _Tip, gen: DataFrame, replace=None, stats_cols=None
+) -> DataFrame:
+    """The manifest of ``v+1``: one row per bucket of the new generation
+    ``gen`` (key range, stats, Bloom bitmaps) plus the tip's rows that
+    ``replace`` (a predicate over manifest rows) does not supersede;
+    ``replace=None`` supersedes every row (a full rewrite). A batch may
+    omit a declared stats column — it is NULL-padded for the aggregate
+    only; the data files keep exactly the batch's columns."""
+    stats_cols = tip.stats_cols if stats_cols is None else stats_cols
+    src = gen
+    for c in stats_cols:
+        if c not in src.columns:
+            src = src.withColumn(
+                c, F.lit(None).cast(tip.manifest.schema[f"min_{c}"].dataType)
+            )
+    rows = _with_bloom(
+        src.groupBy("_kr").agg(*_manifest_agg(tip.key, stats_cols)),
+        src,
+        tip.point_cols,
+        tip.bloom_bits,
+    )
+    if replace is None:
+        return rows
+    # allowMissingColumns: a clone's kept rows carry `ext`, the new
+    # generation's rows are local
+    return tip.manifest.where(~replace).unionByName(
+        rows, allowMissingColumns=True
+    )
+
+
+def _next_dv(
+    spark: SparkSession,
+    path: str,
+    v: int,
+    rows: DataFrame,
+    key: str,
+    phys: str | None = None,
+) -> DataFrame:
+    """The DV state of ``v+1``: one entry per key of ``rows`` pointing
+    ``live_gen`` at ``v+1`` (its fresh copy, or none for a delete),
+    unioned over ``v``'s entries for every other key. ``phys`` renames
+    the key to its physical name (DVs carry the physical key)."""
+    phys = phys or key
+    new = rows.select(
+        "_kr",
+        F.col(key).alias(phys),
+        F.lit(v + 1).cast("long").alias("live_gen"),
+    )
+    old = _read_dv(spark, path, v)
+    if old is None:
+        return new
+    return old.join(new.select(phys), phys, "left_anti").unionByName(new)
+
+
+def _dv_carry(
+    spark: SparkSession, path: str, v: int, dv: DataFrame | None, drop=None
+):
+    """A thunk carrying ``v``'s DV state to ``v+1`` as byte copies —
+    verbatim, or minus the ``drop`` buckets' entries when those buckets
+    are rewritten (their entries die with the superseded generations);
+    None when ``v`` has no DV."""
+    if dv is None:
+        return None
+    if drop is None:
+        return lambda: _copy_dir(
+            spark, f"{path}/_dv/v={v}", f"{path}/_dv/v={v + 1}"
+        )
+    return lambda: _carry_dv_except(spark, path, dv, v, v + 1, drop)
+
+
+def _manifest_step(
+    spark: SparkSession, path: str, v: int, manifest: DataFrame | None
+):
+    """(collect, publish) for the manifest of ``v+1``: ``manifest``
+    written driver-side (_manifest_writer), or with ``manifest=None``
+    the tip's manifest carried VERBATIM as a byte copy (r16). ``publish``
+    writes the ``_SUCCESS`` marker — the commit point."""
+    dest = f"{path}/_manifest/v={v + 1}"
+    if manifest is not None:
+        return _manifest_writer(spark, manifest, dest)
+    return (
+        lambda: _copy_manifest_dir(
+            spark, f"{path}/_manifest/v={v}", dest, commit=False
+        ),
+        lambda: _write_small_file(spark, f"{dest}/_SUCCESS", ""),
+    )
+
+
+def _publish(
+    spark: SparkSession,
+    path: str,
+    v: int,
+    operation: str,
+    changed_buckets: list,
+    *,
+    data: DataFrame | None = None,
+    buckets=(),
+    dv=None,
+    manifest: DataFrame | None = None,
+    meta: str | None = None,
+    **params,
+) -> int:
+    """Write and commit version ``v+1`` (the caller holds its intent
+    marker — _admit); returns ``v+1``. In order:
+
+    1. Concurrently (r17, guide §2.6 — each is an independent read of a
+       materialized checkpoint or of immutable committed state, so the
+       commit costs the slowest, not the sum):
+       - ``data``, the new generation, is appended under
+         ``data/_kr=<b>/_gen=<v+1>`` after deleting what a crashed
+         attempt may have left at that generation in ``buckets`` (the
+         append would otherwise duplicate rows into the garbage);
+       - ``dv``: a DataFrame is written as the DV state of ``v+1``, a
+         thunk carries ``v``'s (_dv_carry), None leaves ``v+1`` with no
+         DV (folded) — deleting any a crashed attempt left there;
+       - ``manifest`` is collected, or with None ``v``'s is byte-copied
+         (_manifest_step).
+    2. ``meta`` (``v=<n>.meta``, e.g. a streaming epoch id), then the
+       operation tag (``v=<n>.op``, _write_commit_op). Both land BEFORE
+       the commit point (r12 advice): a crash here leaves an
+       uncommitted version whose sidecars committed_metas and
+       table_history filter out (they check ``_SUCCESS``). Written
+       after it, a crash would leave a committed version invisible to
+       committed_metas, and a replayed epoch would commit twice.
+    3. The manifest's ``_SUCCESS`` — the atomic commit point. A failure
+       anywhere before it leaves an uncommitted ``v+1``, which
+       rollback_inflight reclaims."""
+    gen = v + 1
+
+    def _write_data() -> None:
+        _clean_uncommitted_generation(spark, path, buckets, gen)
+        data.write.mode("append").partitionBy("_kr", "_gen").parquet(
+            f"{path}/data"
+        )
+
+    dv_step = dv
+    if isinstance(dv, DataFrame):
+
+        def dv_step() -> None:
+            _write_dv(dv, path, gen)
+
+    elif dv is None:
+        _, fs, stale = _fs(spark, f"{path}/_dv/v={gen}")
+        if fs.exists(stale):
+            fs.delete(stale, True)
+    m_collect, m_publish = _manifest_step(spark, path, v, manifest)
+    _run_concurrent(None if data is None else _write_data, dv_step, m_collect)
+    if meta is not None:
+        _write_commit_meta(spark, path, gen, meta)
+    _write_commit_op(
+        spark, path, gen, operation, changed_buckets=changed_buckets, **params
+    )
+    m_publish()
+    return gen
+
+
+def _attach(df: DataFrame, **attrs) -> DataFrame:
+    """``df`` with the committer's result attributes set on it."""
+    for k, val in attrs.items():
+        setattr(df, k, val)
+    return df
+
+
+def _rewrite_generations(
+    spark: SparkSession,
+    path: str,
+    tip: _Tip,
+    rows: list,
+    dv: DataFrame | None,
+    writer: str | None,
+    carry,
+    operation: str,
+    **params,
+) -> DataFrame:
+    """The rewrite bin-packing, PURGE and scoped OPTIMIZE share: the
+    generations of manifest ``rows``, DV-resolved, become ONE fresh
+    generation per bucket at ``v+1``, and every other manifest row —
+    and its files' mtimes — carries forward untouched. ``carry`` is the
+    DV step (_publish's ``dv``). The packed files are RE-SORTED by the
+    table key (r15 — Delta liquid clustering's OPTIMIZE behavior): for
+    a table bootstrapped over a Morton key this restores the z-order
+    inside every rewritten file, so parquet row-group stats stay tight
+    without rewriting untouched generations; a narrow per-partition
+    sort, no shuffle. The sort LEADS with the write's partition columns
+    (_kr, _gen): sorted by (_kr, key) alone, Spark's planned write adds
+    its own partition sort, which drops the key order. Returns the new
+    manifest with ``version`` attached."""
+    from collections import defaultdict
+
+    _admit(spark, path, tip, writer)
+    fresh = _fresh_generation(
+        _apply_dv(_read_gen_dirs(spark, path, rows), dv), tip.v + 1, tip.sch
+    )
+    gens: dict[int, list[int]] = defaultdict(list)
+    for r in rows:
+        gens[int(r._kr)].append(int(r.gen))
+    replace = F.lit(False)
+    for b, gs in gens.items():
+        replace = replace | ((F.col("_kr") == b) & F.col("gen").isin(gs))
+    new_manifest = _next_manifest(tip, fresh, replace)
+    version = _publish(
+        spark, path, tip.v, operation, [],
+        data=fresh.sortWithinPartitions("_kr", "_gen", tip.key),
+        buckets=sorted(gens), dv=carry, manifest=new_manifest, **params,
+    )
+    return _attach(new_manifest, version=version)
+
+
 def upsert_versioned(
     spark: SparkSession,
     target_path: str,
@@ -2238,14 +2558,6 @@ def upsert_versioned(
     view of the touched buckets with ``version`` and
     ``touched_buckets`` attached.
     """
-    writer = writer or _unique_writer()
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(
-            f"upsert_versioned: no table at {target_path} — bootstrap with "
-            "versioned_layout_write"
-        )
-    v = versions[-1]
     # CHECK-constraint gate (constraints.py): a violating batch fails
     # here, before the intent marker, before any write — one FS probe
     # when the table declares no constraints
@@ -2254,73 +2566,42 @@ def upsert_versioned(
     )
 
     check_batch(spark, target_path, staging)
+    tip = _open_tip(spark, target_path, key, "upsert_versioned")
+    v = tip.v
     # r16 column mapping: logical batch -> frozen physical file names
-    sch = _schema_as_of(spark, target_path)
-    if sch is not None:
-        staging = _apply_generated(staging, sch, "upsert_versioned")
-        staging = _to_physical(staging, sch, "upsert_versioned")
-        key = _phys_name(sch, key)
-    manifest = _read_manifest(spark, target_path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
-    # checkpoint the assigned staging ONCE, with the touched-bucket
-    # set riding the materialization as an Observation (r16): the
-    # distinct-collect job is gone, and the merged write below reads
-    # the checkpoint instead of recomputing the staging pipeline.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = (
-        assign_range_bucket(staging, manifest, key)
-        .observe(obs, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
+    staging = _to_physical(
+        _apply_generated(staging, tip.sch, "upsert_versioned"),
+        tip.sch,
+        "upsert_versioned",
     )
-    touched = sorted(int(b) for b in obs.get["b"])
+    assigned, touched = _stage(staging, tip.manifest, tip.key)
+    dv = _read_dv(spark, target_path, v)
     if not touched:
         # empty staging: a zero-data no-op commit (manifest and DV
         # carry forward verbatim) rather than a crash — quarantine
         # mode can legitimately strip a batch to nothing
-        _begin_commit(spark, target_path, v + 1, writer)
-        dv = _read_dv(spark, target_path, v)
-        if dv is not None:  # verbatim carry: byte copy, no Spark job
-            _copy_dir(
-                spark,
-                f"{target_path}/_dv/v={v}",
-                f"{target_path}/_dv/v={v + 1}",
-            )
-        if commit_meta is not None:
-            _write_commit_meta(spark, target_path, v + 1, commit_meta)
-        _write_commit_op(
-            spark, target_path, v + 1, "MERGE", changed_buckets=[], tier="cow"
+        _admit(spark, target_path, tip, writer)
+        version = _publish(
+            spark, target_path, v, "MERGE", [],
+            dv=_dv_carry(spark, target_path, v, dv),
+            meta=commit_meta, tier="cow",
         )
-        # manifest carries forward VERBATIM — a driver-side byte copy
-        # like every other no-op carry commit (r16 advice: this branch
-        # was the one carry still paying a Spark coalesce(1) job)
-        _copy_manifest_dir(
-            spark,
-            f"{target_path}/_manifest/v={v}",
-            f"{target_path}/_manifest/v={v + 1}",
+        return _attach(
+            _project_logical(assigned.drop("_kr"), tip.sch),
+            version=version,
+            touched_buckets=[],
         )
-        out = _project_logical(assigned.drop("_kr"), sch)
-        out.version = v + 1
-        out.touched_buckets = []
-        return out
     # every live generation of the touched buckets (merge-on-read
-    # history included), resolved through the version's DV (read once —
-    # the carry below reuses it instead of a second _read_dv)
-    dv = _read_dv(spark, target_path, v)
+    # history included), resolved through the version's DV
     target = _apply_dv(
         _read_gen_dirs(
             spark,
             target_path,
-            [r for r in manifest.collect() if r._kr in set(touched)],
+            [r for r in tip.manifest.collect() if r._kr in set(touched)],
         ),
         dv,
     )
-    # conflict gate BEFORE any write: the loser must not contaminate
-    # the winner's generation directories
-    _begin_commit(spark, target_path, v + 1, writer)
+    _admit(spark, target_path, tip, writer)
     # anti+union with allowMissingColumns: staging may CARRY new columns
     # (schema evolution — untouched rows get NULL) or OMIT evolved ones
     # (NULL for the fresh copies); the union resolves both by name, so
@@ -2328,60 +2609,25 @@ def upsert_versioned(
     # travel returns each version's own schema (old manifests list only
     # pre-evolution directories).
     untouched = target.drop("_gen").join(
-        assigned.select(key), key, "left_anti"
+        assigned.select(tip.key), tip.key, "left_anti"
     )
-    merged = (
-        untouched.unionByName(assigned, allowMissingColumns=True)
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
+    merged = _fresh_generation(
+        untouched.unionByName(assigned, allowMissingColumns=True), v + 1
     )
-    # allowMissingColumns: rewritten buckets' rows carry no `ext` (they
-    # are local now), a clone's untouched rows keep theirs
-    new_manifest = manifest.where(~F.col("_kr").isin(touched)).unionByName(
-        _with_bloom(
-            merged.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            merged, point_cols, bloom_bits,
-        ),
-        allowMissingColumns=True,
+    # touched buckets are fully rewritten: their DV entries die with
+    # their superseded generations; untouched buckets' carry verbatim
+    version = _publish(
+        spark, target_path, v, "MERGE", [],
+        data=merged, buckets=touched,
+        dv=_dv_carry(spark, target_path, v, dv, drop=touched),
+        manifest=_next_manifest(tip, merged, F.col("_kr").isin(touched)),
+        meta=commit_meta, tier="cow",
     )
-
-    # the three independent commit writes overlap (r17, guide §2.6):
-    # data append, DV carry, and the manifest aggregation all read the
-    # already-materialized checkpoint (or immutable committed state),
-    # so per-commit latency is the slowest of the three, not their sum
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, target_path, touched, v + 1)
-        merged.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{target_path}/data"
-        )
-
-    def _carry_dv() -> None:
-        # touched buckets are fully rewritten: their DV entries die
-        # with their superseded generations; untouched buckets' carry
-        # verbatim (byte copy per bucket directory — r17)
-        if dv is not None:
-            _carry_dv_except(spark, target_path, dv, v, v + 1, touched)
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{target_path}/_manifest/v={v + 1}"
+    return _attach(
+        _project_logical(merged.drop("_gen"), tip.sch),
+        version=version,
+        touched_buckets=touched,
     )
-    _run_concurrent(_write_data, _carry_dv, m_collect)
-    # meta BEFORE the manifest commit point (r12 advice): a crash
-    # between manifest-_SUCCESS and a later meta write would leave a
-    # committed version invisible to committed_metas, so a replayed
-    # epoch would re-commit a duplicate version. Written this side of
-    # the commit, a crash leaves an uncommitted version whose meta is
-    # filtered out by committed_metas (it checks _SUCCESS) — no window.
-    if commit_meta is not None:
-        _write_commit_meta(spark, target_path, v + 1, commit_meta)
-    _write_commit_op(
-        spark, target_path, v + 1, "MERGE", changed_buckets=[], tier="cow"
-    )
-    m_publish()
-    out = _project_logical(merged.drop("_gen"), sch)
-    out.version = v + 1
-    out.touched_buckets = touched
-    return out
 
 
 def upsert_versioned_dv(
@@ -2436,134 +2682,49 @@ def upsert_versioned_dv(
     ConcurrentWriteError exactly as before — upsert_with_retry's
     rebase handles them. A winner that never commits (crashed holder)
     times out (_ADMIT_WAIT_S) and re-raises."""
-    writer = writer or _unique_writer()
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(
-            f"upsert_versioned_dv: no table at {target_path} — bootstrap "
-            "with versioned_layout_write"
-        )
-    v = versions[-1]
     # CHECK-constraint gate — see upsert_versioned
     from data_pipeline_bigquery_to_sftp_server_spark.operators.constraints import (
         check_batch,
     )
 
     check_batch(spark, target_path, staging)
+    # auto_evolve (Delta's MERGE WITH SCHEMA EVOLUTION) first commits
+    # one metadata-only ADD COLUMN per unknown staging column
+    if auto_evolve:
+        _auto_evolve_schema(spark, target_path, staging)
+    tip = _open_tip(spark, target_path, key, "upsert_versioned_dv")
     # r16 column mapping: the user's LOGICAL batch translates to the
     # files' frozen physical names at the write boundary (no-op for
     # tables that never ran a schema DDL); DV / manifest stats /
-    # bucket layout stay uniform across any rename. auto_evolve
-    # (Delta's MERGE WITH SCHEMA EVOLUTION) first commits one
-    # metadata-only ADD COLUMN per unknown staging column.
-    if auto_evolve:
-        _auto_evolve_schema(spark, target_path, staging)
-        v = _list_versions(spark, f"{target_path}/_manifest")[-1]
-    sch = _schema_as_of(spark, target_path)
-    if sch is not None:
-        staging = _apply_generated(staging, sch, "upsert_versioned_dv")
-        staging = _to_physical(staging, sch, "upsert_versioned_dv")
-        key = _phys_name(sch, key)
-    manifest = _read_manifest(spark, target_path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
+    # bucket layout stay uniform across any rename
+    staging = _to_physical(
+        _apply_generated(staging, tip.sch, "upsert_versioned_dv"),
+        tip.sch,
+        "upsert_versioned_dv",
+    )
     # stage BEFORE the commit gate: the materialized assignment is
     # what disjoint admission reuses across winners (and the critical
-    # section shrinks for everyone else). The touched-bucket set rides
-    # the checkpoint materialization as an Observation (r16, guide
-    # §1.2: one job, not a checkpoint job plus a distinct-collect job
-    # — the same trick connected_components uses for its label sum).
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = assign_range_bucket(staging, manifest, key)
-    assigned = assigned.observe(
-        obs, F.collect_set("_kr").alias("b")
-    ).localCheckpoint(eager=True)
-    touched = sorted(int(b) for b in obs.get["b"])
-    admitted_over: list[int] = []
-    while True:
-        try:
-            _begin_commit(spark, target_path, v + 1, writer)
-            break
-        except ConcurrentWriteError:
-            if not admit_disjoint:
-                raise
-            if not _wait_for_commit(spark, target_path, v + 1):
-                raise  # crashed holder: rebase/rollback path decides
-            win = _commit_op_payload(spark, target_path, v + 1) or {}
-            op_name = win.get("operation")
-            tier = (win.get("parameters") or {}).get("tier")
-            cb = win.get("changed_buckets")
-            admissible = (
-                op_name == "DELETE" or (op_name == "MERGE" and tier == "mor")
-            )
-            if not admissible or cb is None or set(cb) & set(touched):
-                raise
-            admitted_over.append(v + 1)
-            v = v + 1
-            manifest = _read_manifest(spark, target_path, v)
+    # section shrinks for everyone else)
+    assigned, touched = _stage(staging, tip.manifest, tip.key)
+    admitted_over = _admit(
+        spark, target_path, tip, writer, touched, admit_disjoint
+    )
+    v = tip.v
     fresh = assigned.withColumn("_gen", F.lit(v + 1).cast("long"))
-    dv_new = fresh.select(
-        "_kr", key, F.lit(v + 1).cast("long").alias("live_gen")
+    version = _publish(
+        spark, target_path, v, "MERGE", touched,
+        data=fresh, buckets=touched,
+        # read after admission: a winner's entries carry forward
+        dv=_next_dv(spark, target_path, v, fresh, tip.key),
+        manifest=_next_manifest(tip, fresh, F.lit(False)),
+        meta=commit_meta, tier="mor",
     )
-    old_dv = _read_dv(spark, target_path, v)
-    dv_state = (
-        dv_new
-        if old_dv is None
-        else old_dv.join(dv_new.select(key), key, "left_anti").unionByName(
-            dv_new
-        )
+    return _attach(
+        _project_logical(fresh.drop("_gen"), tip.sch),
+        version=version,
+        touched_buckets=touched,
+        admitted_over=admitted_over,
     )
-    # a staging batch may omit a declared stats column (or carry new
-    # ones — schema evolution); pad for the manifest aggregate only,
-    # the data files stay exactly what staging carried
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
-    new_manifest = manifest.unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src, point_cols, bloom_bits,
-        ),
-        allowMissingColumns=True,  # clones: old rows may carry `ext`
-    )
-
-    # data append, DV write, and manifest aggregation are independent
-    # reads of the materialized checkpoint / committed state — overlap
-    # them (r17, guide §2.6); the commit point stays the manifest
-    # _SUCCESS, written last by m_publish
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, target_path, touched, v + 1)
-        fresh.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{target_path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{target_path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(
-        _write_data,
-        lambda: _write_dv(dv_state, target_path, v + 1),
-        m_collect,
-    )
-    # meta before the manifest commit point — see upsert_versioned
-    if commit_meta is not None:
-        _write_commit_meta(spark, target_path, v + 1, commit_meta)
-    _write_commit_op(
-        spark, target_path, v + 1, "MERGE",
-        changed_buckets=touched, tier="mor",
-    )
-    m_publish()
-    out = _project_logical(fresh.drop("_gen"), sch)
-    out.version = v + 1
-    out.touched_buckets = touched
-    out.admitted_over = admitted_over
-    return out
 
 
 _ADMIT_WAIT_S = 30.0  # how long admission waits for a racing winner
@@ -2604,6 +2765,8 @@ def _commit_op_payload(
     return out if isinstance(out, dict) else None
 
 
+
+
 def delete_versioned(
     spark: SparkSession,
     target_path: str,
@@ -2621,69 +2784,21 @@ def delete_versioned(
     version still serves it. Deleting an absent key is a no-op entry.
     ``writer`` defaults per-call-unique (see _unique_writer). Returns
     the new version number."""
-    writer = writer or _unique_writer()
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"delete_versioned: no table at {target_path}")
-    v = versions[-1]
+    tip = _open_tip(spark, target_path, key, "delete_versioned")
     # r16 column mapping: the key frame arrives under its logical name
-    sch = _schema_as_of(spark, target_path)
-    if sch is not None:
-        keys = _to_physical(keys.select(key), sch, "delete_versioned")
-        key = _phys_name(sch, key)
-    manifest = _read_manifest(spark, target_path, v)
-    # checkpoint the assigned keys ONCE with the touched-bucket set
-    # riding the materialization as an Observation (r16): previously
-    # the keys pipeline was computed twice — a distinct-collect job
-    # for `touched`, then again inside the DV write's union.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = (
-        assign_range_bucket(keys.select(key), manifest, key)
-        .observe(obs, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
+    assigned, touched = _stage(
+        _to_physical(keys.select(key), tip.sch, "delete_versioned"),
+        tip.manifest,
+        tip.key,
     )
-    touched = sorted(int(b) for b in obs.get["b"])
-    _begin_commit(spark, target_path, v + 1, writer)
-    dv_new = assigned.select(
-        "_kr", key, F.lit(v + 1).cast("long").alias("live_gen")
+    _admit(spark, target_path, tip, writer)
+    # data untouched: the only Spark job is the DV write; the manifest
+    # carries forward verbatim as a byte copy
+    return _publish(
+        spark, target_path, tip.v, "DELETE", touched,
+        dv=_next_dv(spark, target_path, tip.v, assigned, tip.key),
+        meta=commit_meta,
     )
-    old_dv = _read_dv(spark, target_path, v)
-    dv_state = (
-        dv_new
-        if old_dv is None
-        else old_dv.join(dv_new.select(key), key, "left_anti").unionByName(
-            dv_new
-        )
-    )
-    # the DV write (the commit's only Spark job) overlaps with the
-    # driver-side metadata work — manifest byte-copy and sidecar
-    # writes (r17, guide §2.6); the _SUCCESS commit point lands last
-    def _metadata() -> None:
-        # data untouched: the manifest carries forward verbatim — a
-        # driver-side byte copy, not a Spark job (r16); _SUCCESS
-        # deferred past the DV write below
-        _copy_manifest_dir(
-            spark,
-            f"{target_path}/_manifest/v={v}",
-            f"{target_path}/_manifest/v={v + 1}",
-            commit=False,
-        )
-        # meta before the manifest commit point — see upsert_versioned
-        if commit_meta is not None:
-            _write_commit_meta(spark, target_path, v + 1, commit_meta)
-        _write_commit_op(
-            spark, target_path, v + 1, "DELETE", changed_buckets=touched
-        )
-
-    _run_concurrent(
-        lambda: _write_dv(dv_state, target_path, v + 1), _metadata
-    )
-    _write_small_file(
-        spark, f"{target_path}/_manifest/v={v + 1}/_SUCCESS", ""
-    )
-    return v + 1
 
 
 def merge_arms_versioned_dv(
@@ -2726,48 +2841,27 @@ def merge_arms_versioned_dv(
     update_arms, delete_codes, insert_codes, _bs = _arm_actions(
         matched, not_matched
     )
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(
-            f"merge_arms_versioned_dv: no table at {target_path} — "
-            "bootstrap with versioned_layout_write"
-        )
     if auto_evolve:
         # Delta's MERGE WITH SCHEMA EVOLUTION: unknown staging columns
         # become declared columns (metadata-only commits) BEFORE the
         # merge, so update/insert arms can take them
         _auto_evolve_schema(spark, target_path, staging)
-        versions = _list_versions(spark, f"{target_path}/_manifest")
-    v = versions[-1]
-    manifest = _read_manifest(spark, target_path, v)
-    stats_cols = _stats_cols_of(manifest)
+    tip = _open_tip(spark, target_path, key, "merge_arms_versioned_dv")
     # r16 column mapping: arm conditions and staging use LOGICAL names,
     # so the merge computes in logical space — the live read projects
     # physical->logical here, and the fresh rows translate back to the
-    # files' frozen physical names at the write boundary below
-    sch = _schema_as_of(spark, target_path)
-    # the staged assignment is checkpointed ONCE with the touched-
-    # bucket set riding the materialization as an Observation (r17 —
-    # the plain DV upsert's r16 treatment): previously the assignment
-    # pipeline ran twice (a distinct-collect job for `touched`, then
-    # again as the build side of the arm-classification join below)
-    from pyspark.sql import Observation
-
-    obs_t = Observation()
-    assigned = (
-        assign_range_bucket(staging, manifest, key)
-        .observe(obs_t, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(int(b) for b in obs_t.get["b"])
+    # files' frozen physical names (tip.key for the key) at the write
+    # boundary below
+    sch = tip.sch
+    assigned, touched = _stage(staging, tip.manifest, key)
     live = _project_logical(
         _apply_dv(
             _read_gen_dirs(
                 spark,
                 target_path,
-                [r for r in manifest.collect() if r._kr in set(touched)],
+                [r for r in tip.manifest.collect() if r._kr in set(touched)],
             ),
-            _read_dv(spark, target_path, v),
+            _read_dv(spark, target_path, tip.v),
         ).drop("_gen", "_kr"),
         sch,
     )
@@ -2858,30 +2952,10 @@ def merge_arms_versioned_dv(
     # nor moved a cutpoint, so `resolved` (computed pre-gate) is still
     # exactly what a serial execution would produce; the DV union
     # below re-reads the winner's committed state.
-    admitted_over: list[int] = []
-    writer = writer or _unique_writer()
-    while True:
-        try:
-            _begin_commit(spark, target_path, v + 1, writer)
-            break
-        except ConcurrentWriteError:
-            if not admit_disjoint:
-                raise
-            if not _wait_for_commit(spark, target_path, v + 1):
-                raise  # crashed holder: rebase/rollback path decides
-            win = _commit_op_payload(spark, target_path, v + 1) or {}
-            op_name = win.get("operation")
-            tier = (win.get("parameters") or {}).get("tier")
-            cb = win.get("changed_buckets")
-            admissible = (
-                op_name == "DELETE" or (op_name == "MERGE" and tier == "mor")
-            )
-            if not admissible or cb is None or set(cb) & set(touched):
-                raise
-            admitted_over.append(v + 1)
-            v = v + 1
-            # the winner may have appended manifest rows in ITS buckets
-            manifest = _read_manifest(spark, target_path, v)
+    admitted_over = _admit(
+        spark, target_path, tip, writer, touched, admit_disjoint
+    )
+    v = tip.v
     fresh = resolved.where(
         F.col("_arm").isin(list(update_arms) + insert_codes)
     ).drop("_arm").withColumn("_gen", F.lit(v + 1).cast("long"))
@@ -2899,95 +2973,38 @@ def merge_arms_versioned_dv(
     # disk (files, DV, manifest stats); `fresh` itself stays logical
     # for the returned frame
     fresh_phys = _to_physical(fresh, sch, "merge_arms_versioned_dv")
-    key_phys = _phys_name(sch, key) if sch is not None else key
     wrote_data = (n_updated + n_inserted) > 0
     # DV entries for every CLAIMED key: updates+inserts point at their
     # fresh copy, deletes point at a generation holding no copy.
     # noop (matched, unclaimed) and skip (not-matched, unclaimed) rows
     # get NO entry — their state is untouched by this commit.
-    claimed = resolved.where(~F.col("_arm").isin(["noop", "skip"])).select(
-        "_kr",
-        F.col(key).alias(key_phys),  # DVs carry the physical key name
-        F.lit(v + 1).cast("long").alias("live_gen"),
-    )
-    old_dv = _read_dv(spark, target_path, v)
-    dv_state = (
-        claimed
-        if old_dv is None
-        else old_dv.join(
-            claimed.select(key_phys), key_phys, "left_anti"
-        ).unionByName(claimed)
-    )
-    if wrote_data:
-        stats_src = fresh_phys
-        for c in stats_cols:
-            if c not in stats_src.columns:
-                stats_src = stats_src.withColumn(
-                    c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-                )
-        point_cols = _point_cols_of(manifest)
-        new_manifest = manifest.unionByName(
-            _with_bloom(
-                stats_src.groupBy("_kr").agg(
-                    *_manifest_agg(key_phys, stats_cols)
-                ),
-                stats_src,
-                point_cols,
-                _bloom_bits_of(manifest, point_cols) if point_cols else 0,
-            ),
-            allowMissingColumns=True,  # clones: old rows may carry `ext`
-        )
-    else:
-        new_manifest = manifest  # zero-data-file commit: carry forward
-
-    # data append, DV write, and manifest aggregation overlap (r17,
-    # guide §2.6) — all are independent reads of the materialized
-    # resolved checkpoint / committed state; _SUCCESS lands last
-    def _write_data() -> None:
-        if not wrote_data:
-            return
-        _clean_uncommitted_generation(spark, target_path, touched, v + 1)
-        fresh_phys.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{target_path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{target_path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(
-        _write_data,
-        lambda: _write_dv(dv_state, target_path, v + 1),
-        m_collect if wrote_data else None,
-    )
-    # meta before the manifest commit point — see upsert_versioned
-    if commit_meta is not None:
-        _write_commit_meta(spark, target_path, v + 1, commit_meta)
+    claimed = resolved.where(~F.col("_arm").isin(["noop", "skip"]))
     # the CDF change set is the CLAIMED keys' buckets (noop/skip rows
     # wrote no DV entry) — captured by the checkpoint's Observation
-    # above, no extra job
-    _write_commit_op(
-        spark, target_path, v + 1, "MERGE",
-        changed_buckets=claimed_buckets,
+    # above, no extra job. A zero-data-file commit carries the
+    # manifest forward verbatim.
+    version = _publish(
+        spark, target_path, v, "MERGE", claimed_buckets,
+        data=fresh_phys if wrote_data else None,
+        buckets=touched,
+        dv=_next_dv(spark, target_path, v, claimed, key, tip.key),
+        manifest=(
+            _next_manifest(tip, fresh_phys, F.lit(False))
+            if wrote_data
+            else None
+        ),
+        meta=commit_meta,
         tier="mor", arms=len(tuple(matched)) + len(tuple(not_matched)),
     )
-    if wrote_data:
-        m_publish()
-    else:
-        # zero-data-file commit: the manifest carries forward VERBATIM
-        # — a driver-side byte copy like every other carry commit (r17)
-        _copy_manifest_dir(
-            spark,
-            f"{target_path}/_manifest/v={v}",
-            f"{target_path}/_manifest/v={v + 1}",
-        )
-    out = fresh.drop("_gen")
-    out.version = v + 1
-    out.touched_buckets = touched
-    out.admitted_over = admitted_over
-    out.n_updated = int(n_updated)
-    out.n_deleted = int(n_deleted)
-    out.n_inserted = int(n_inserted)
-    return out
+    return _attach(
+        fresh.drop("_gen"),
+        version=version,
+        touched_buckets=touched,
+        admitted_over=admitted_over,
+        n_updated=int(n_updated),
+        n_deleted=int(n_deleted),
+        n_inserted=int(n_inserted),
+    )
 
 
 def versioned_absorb(
@@ -3076,6 +3093,8 @@ def upsert_with_retry(
     raise last
 
 
+
+
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -3114,39 +3133,21 @@ def compact_table(
     contract as every layout.py caller. The bucket assignment itself
     (key ranges) is untouched: z-clustering changes file-internal
     order and statistics, never commit semantics."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
+    tip = _open_tip(spark, path, key, "compact_table")
     # compaction rewrites files, which keep their frozen PHYSICAL
     # names (r16 column mapping) — caller-supplied names translate
-    sch = _schema_as_of(spark, path, v)
-    key = _phys_name(sch, key)
-    zorder_by = [_phys_name(sch, c, "zorder_by") for c in (zorder_by or [])]
-    if zorder_by:
-        # promoted dimensions join the maintained stats set (the key
-        # itself already has min_key/max_key)
-        stats_cols = stats_cols + [
-            c for c in zorder_by if c not in stats_cols and c != key
-        ]
-    live = read_version(spark, path, v, physical=True)  # DV-resolved
-    # DROPped columns' retired physicals are scrubbed by any full
-    # rewrite (r16 — Delta's REORG column purge): time travel to
-    # pre-drop versions still reads the OLD generations, which keep
-    # the bytes until vacuum
-    retired = [
-        c for c in (sch or {}).get("retired", []) if c in live.columns
+    zorder_by = [
+        _phys_name(tip.sch, c, "zorder_by") for c in (zorder_by or [])
     ]
-    if retired:
-        live = live.drop(*retired)
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
-    compacted = (
-        live.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
+    # promoted dimensions join the maintained stats set (the key itself
+    # already has min_key/max_key)
+    stats_cols = tip.stats_cols + [
+        c for c in zorder_by if c not in tip.stats_cols and c != tip.key
+    ]
+    live = read_version(spark, path, tip.v, physical=True)  # DV-resolved
+    _admit(spark, path, tip, writer)
+    # any full rewrite scrubs DROPped columns (_fresh_generation)
+    compacted = _fresh_generation(live, tip.v + 1, tip.sch)
     to_write = compacted
     if zorder_by:
         from data_pipeline_bigquery_to_sftp_server_spark.operators.layout import (
@@ -3157,45 +3158,25 @@ def compact_table(
         # sort inside each task — no global sort, no temp column (the
         # sort expression never lands in the written files). The sort
         # applies to the WRITE only; the manifest aggregate below runs
-        # over the checkpointed frame (order-insensitive min/max).
+        # over the checkpointed frame (order-insensitive min/max). It
+        # leads with the partition columns — see _rewrite_generations.
         to_write = compacted.repartition("_kr").sortWithinPartitions(
-            F.col("_kr"),
+            "_kr",
+            "_gen",
             zorder_key([F.col(c) for c in zorder_by], bits=int(zorder_bits)),
         )
-    point_cols = _point_cols_of(manifest)
-    new_manifest = _with_bloom(
-        compacted.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-        compacted,
-        point_cols,
-        _bloom_bits_of(manifest, point_cols) if point_cols else 0,
-    )
-
-    # data rewrite and manifest aggregation overlap (r17, guide §2.6):
-    # both read the materialized checkpoint; _SUCCESS lands last
-    def _write_data() -> None:
-        _clean_uncommitted_generation(
-            spark, path,
-            # manifest is a LocalRelation: the bucket set is a free
-            # driver-side projection, not a distinct-aggregation job
-            sorted({r[0] for r in manifest.select("_kr").collect()}),
-            v + 1,
-        )
-        to_write.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(_write_data, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "OPTIMIZE", changed_buckets=[],
+    new_manifest = _next_manifest(tip, compacted, stats_cols=stats_cols)
+    version = _publish(
+        spark, path, tip.v, "OPTIMIZE", [],
+        data=to_write,
+        # manifest is a LocalRelation: the bucket set is a free
+        # driver-side projection, not a distinct-aggregation job
+        buckets=sorted({r._kr for r in tip.manifest.collect()}),
+        manifest=new_manifest,
         mode="zorder" if zorder_by else "full",
         **({"zorder_by": list(zorder_by)} if zorder_by else {}),
     )
-    m_publish()
-    new_manifest.version = v + 1
-    return new_manifest
+    return _attach(new_manifest, version=version)
 
 
 def compact_small_generations(
@@ -3225,105 +3206,37 @@ def compact_small_generations(
     Returns the new manifest frame with ``version``/``n_packed_dirs``/
     ``n_new_dirs`` attached; a table with nothing to pack returns the
     CURRENT manifest (no empty commit) with n_packed_dirs = 0."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
-    # packed rewrites keep frozen PHYSICAL names (r16 column mapping)
-    key = _phys_name(_schema_as_of(spark, path, v), key)
+    tip = _open_tip(spark, path, key, "compact_small_generations")
     jvm, fs, _ = _fs(spark, path)
-    rows = manifest.collect()
     from collections import defaultdict
 
-    small: dict[int, list[int]] = defaultdict(list)
-    by_gen: dict[tuple[int, int], object] = {}
-    for r in rows:
-        by_gen[(r._kr, r.gen)] = r
+    small: dict[int, list] = defaultdict(list)
+    for r in tip.manifest.collect():
         # ext-aware: a shallow clone's external generations size (and
         # pack — materializing them locally) exactly like local ones
-        d = _gen_dir(path, r)
-        p = jvm.org.apache.hadoop.fs.Path(d)
+        p = jvm.org.apache.hadoop.fs.Path(_gen_dir(path, r))
         fs_d = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
         if fs_d.getContentSummary(p).getLength() < int(min_file_bytes):
-            small[r._kr].append(r.gen)
-    packed = {b: sorted(gs) for b, gs in small.items() if len(gs) >= 2}
+            small[r._kr].append(r)
+    packed = {b: rs for b, rs in small.items() if len(rs) >= 2}
     if not packed:
-        manifest.version = v
-        manifest.n_packed_dirs = 0
-        manifest.n_new_dirs = 0
-        return manifest
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
-    dv = _read_dv(spark, path, v)
-    data = _apply_dv(
-        _read_gen_dirs(
-            spark,
-            path,
-            [by_gen[(b, g)] for b, gs in packed.items() for g in gs],
-        ),
-        dv,
-    )
-    fresh = (
-        data.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
-    cond = F.lit(False)
-    for b, gs in packed.items():
-        cond = cond | (
-            (F.col("_kr") == int(b)) & F.col("gen").isin([int(g) for g in gs])
+        return _attach(
+            tip.manifest, version=tip.v, n_packed_dirs=0, n_new_dirs=0
         )
-    new_manifest = manifest.where(~cond).unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src,
-            point_cols,
-            bloom_bits,
+    # the packed read is DV-resolved, and the DV carries forward
+    # verbatim: fresh copies at v+1 satisfy every surviving entry's
+    # `_gen >= live_gen`, dead keys wrote none
+    dv = _read_dv(spark, path, tip.v)
+    return _attach(
+        _rewrite_generations(
+            spark, path, tip,
+            [r for rs in packed.values() for r in rs],
+            dv, writer, _dv_carry(spark, path, tip.v, dv),
+            "OPTIMIZE", mode="binpack",
         ),
-        allowMissingColumns=True,  # clones: old rows may carry `ext`
+        n_packed_dirs=sum(len(rs) for rs in packed.values()),
+        n_new_dirs=len(packed),
     )
-    # data rewrite, the DV's verbatim byte-copy carry (r16), and the
-    # manifest aggregation overlap (r17, guide §2.6)
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, path, list(packed), v + 1)
-        # packed files are RE-SORTED by (bucket, table key) on the way
-        # out (r15 — Delta liquid clustering's OPTIMIZE behavior): for
-        # a table bootstrapped over a Morton key this incrementally
-        # restores the z-order inside every rewritten file, so parquet
-        # row-group stats stay tight without ever rewriting untouched
-        # generations. A narrow per-partition sort over sub-threshold
-        # bytes — no shuffle.
-        fresh.sortWithinPartitions("_kr", key).write.mode(
-            "append"
-        ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
-
-    def _carry_dv() -> None:
-        # fresh copies at v+1 satisfy every surviving entry's
-        # `_gen >= live_gen`, dead keys wrote none
-        if dv is not None:
-            _copy_dir(spark, f"{path}/_dv/v={v}", f"{path}/_dv/v={v + 1}")
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(_write_data, _carry_dv, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "OPTIMIZE", changed_buckets=[], mode="binpack"
-    )
-    m_publish()
-    new_manifest.version = v + 1
-    new_manifest.n_packed_dirs = sum(len(gs) for gs in packed.values())
-    new_manifest.n_new_dirs = len(packed)
-    return new_manifest
 
 
 def purge_deletion_vectors(
@@ -3348,89 +3261,32 @@ def purge_deletion_vectors(
     the current manifest without committing. Returns the new manifest
     with ``version`` / ``n_purged_buckets`` / ``n_dv_entries``
     (entries folded) attached."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
-    # rewrites land under frozen PHYSICAL names (r16 column mapping)
-    sch = _schema_as_of(spark, path, v)
-    key = _phys_name(sch, key)
-    dv = _read_dv(spark, path, v)
+    tip = _open_tip(spark, path, key, "purge_deletion_vectors")
+    dv = _read_dv(spark, path, tip.v)
     if dv is None:
-        manifest.version = v
-        manifest.n_purged_buckets = 0
-        manifest.n_dv_entries = 0
-        return manifest
+        return _attach(
+            tip.manifest, version=tip.v, n_purged_buckets=0, n_dv_entries=0
+        )
     # one aggregation job yields BOTH planning facts (r17, guide §1.2:
     # the debt-bucket set and the entry count previously cost a
     # distinct-collect job plus a count job over the same DV read)
-    _dv_facts = dv.agg(
+    facts = dv.agg(
         F.collect_set("_kr").alias("b"), F.count(F.lit(1)).alias("n")
     ).first()
-    debt = sorted(int(b) for b in _dv_facts["b"])
-    n_entries = int(_dv_facts["n"])
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
-    rows = manifest.collect()
-    data = _apply_dv(
-        _read_gen_dirs(spark, path, [r for r in rows if r._kr in set(debt)]),
-        dv,
-    )
-    # rewritten buckets scrub DROPped columns' retired physicals too
-    retired = [
-        c for c in (sch or {}).get("retired", []) if c in data.columns
-    ]
-    if retired:
-        data = data.drop(*retired)
-    fresh = (
-        data.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
-    new_manifest = manifest.where(
-        ~F.col("_kr").isin([int(b) for b in debt])
-    ).unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src,
-            point_cols,
-            bloom_bits,
+    debt = {int(b) for b in facts["b"]}
+    # no DV at v+1: the debt is folded — every entry pointed into a
+    # rewritten bucket, and the fresh generation holds exactly the live
+    # rows
+    return _attach(
+        _rewrite_generations(
+            spark, path, tip,
+            [r for r in tip.manifest.collect() if r._kr in debt],
+            dv, writer, None,
+            "REORG", mode="purge", purged_buckets=len(debt),
         ),
-        allowMissingColumns=True,  # clones: old rows may carry `ext`
+        n_purged_buckets=len(debt),
+        n_dv_entries=int(facts["n"]),
     )
-    # deliberately NO _dv/v=<v+1> write: the debt is folded — every
-    # entry pointed into a rewritten bucket, and the fresh generation
-    # holds exactly the live rows. Data rewrite and manifest
-    # aggregation overlap (r17, guide §2.6).
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, path, debt, v + 1)
-        fresh.sortWithinPartitions("_kr", key).write.mode(
-            "append"
-        ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(_write_data, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "REORG",
-        changed_buckets=[], mode="purge", purged_buckets=len(debt),
-    )
-    m_publish()
-    new_manifest.version = v + 1
-    new_manifest.n_purged_buckets = len(debt)
-    new_manifest.n_dv_entries = int(n_entries)
-    return new_manifest
-
 
 
 def compact_key_range(
@@ -3453,20 +3309,11 @@ def compact_key_range(
     entries are already optimal and are skipped even when in range.
     Returns the new manifest with ``version`` / ``n_compacted_buckets``
     attached (no work -> current manifest, no commit)."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
-    sch = _schema_as_of(spark, path, v)
-    key = _phys_name(sch, key)
-    rows = manifest.collect()
-    dv = _read_dv(spark, path, v)
+    tip = _open_tip(spark, path, key, "compact_key_range")
+    rows = tip.manifest.collect()
+    dv = _read_dv(spark, path, tip.v)
     dv_buckets = (
-        set() if dv is None else _dv_bucket_set(spark, path, v, dv)
+        set() if dv is None else _dv_bucket_set(spark, path, tip.v, dv)
     )
     from collections import Counter
 
@@ -3480,67 +3327,17 @@ def compact_key_range(
         }
     )
     if not hit:
-        manifest.version = v
-        manifest.n_compacted_buckets = 0
-        return manifest
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
-    data = _apply_dv(
-        _read_gen_dirs(spark, path, [r for r in rows if r._kr in set(hit)]),
-        dv,
-    )
-    retired = [
-        c for c in (sch or {}).get("retired", []) if c in data.columns
-    ]
-    if retired:  # scoped rewrites scrub dropped columns too
-        data = data.drop(*retired)
-    fresh = (
-        data.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
-    new_manifest = manifest.where(
-        ~F.col("_kr").isin([int(b) for b in hit])
-    ).unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src,
-            point_cols,
-            bloom_bits,
+        return _attach(tip.manifest, version=tip.v, n_compacted_buckets=0)
+    # compacted buckets' DV entries fold away, other buckets' carry
+    return _attach(
+        _rewrite_generations(
+            spark, path, tip,
+            [r for r in rows if r._kr in set(hit)],
+            dv, writer, _dv_carry(spark, path, tip.v, dv, drop=hit),
+            "OPTIMIZE", mode="range", n_buckets_compacted=len(hit),
         ),
-        allowMissingColumns=True,
+        n_compacted_buckets=len(hit),
     )
-
-    # data rewrite, DV carry (compacted buckets' entries fold away;
-    # other buckets' byte-copy verbatim — r17), and the manifest
-    # aggregation overlap (guide §2.6); _SUCCESS lands last
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, path, hit, v + 1)
-        fresh.sortWithinPartitions("_kr", key).write.mode(
-            "append"
-        ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
-
-    def _carry_dv() -> None:
-        if dv is not None:
-            _carry_dv_except(spark, path, dv, v, v + 1, hit)
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(_write_data, _carry_dv, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "OPTIMIZE",
-        changed_buckets=[], mode="range", n_buckets_compacted=len(hit),
-    )
-    m_publish()
-    new_manifest.version = v + 1
-    new_manifest.n_compacted_buckets = len(hit)
-    return new_manifest
 
 
 def rebucket_table(
@@ -3568,62 +3365,33 @@ def rebucket_table(
     the same O(table) price any re-layout costs; old generations stay
     until vacuumed. Returns the new manifest with ``version``
     attached."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
-    # the re-layout rewrites files under frozen PHYSICAL names (r16)
-    key = _phys_name(_schema_as_of(spark, path, v), key)
-    live = read_version(spark, path, v, physical=True).drop("_gen", "_kr")
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
+    tip = _open_tip(spark, path, key, "rebucket_table")
+    live = read_version(spark, path, tip.v, physical=True).drop("_gen", "_kr")
+    _admit(spark, path, tip, writer)
     from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
         with_global_rank,
     )
 
-    ranked, n_total = with_global_rank(live, [key])
-    fresh = (
+    ranked, n_total = with_global_rank(live, [tip.key])
+    fresh = _fresh_generation(
         ranked.withColumn(
             "_kr",
             F.expr(f"(grank - 1) * {int(n_buckets)} div {int(n_total)}").cast(
                 "long"
             ),
-        )
-        .drop("grank")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
+        ).drop("grank"),
+        tip.v + 1,
     )
-    new_manifest = _with_bloom(
-        fresh.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-        fresh,
-        point_cols,
-        bloom_bits,
+    new_manifest = _next_manifest(tip, fresh)
+    # table metadata is not versioned; like the op tag it lands before
+    # the commit point
+    _write_table_meta(spark, path, key=tip.key, n_buckets=int(n_buckets))
+    version = _publish(
+        spark, path, tip.v, "REBUCKET", [],
+        data=fresh, buckets=range(int(n_buckets)), manifest=new_manifest,
+        n_buckets=int(n_buckets),
     )
-
-    # data rewrite and manifest aggregation overlap (r17, guide §2.6)
-    def _write_data() -> None:
-        _clean_uncommitted_generation(
-            spark, path, list(range(int(n_buckets))), v + 1
-        )
-        fresh.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(_write_data, m_collect)
-    _write_table_meta(spark, path, key=key, n_buckets=int(n_buckets))
-    _write_commit_op(
-        spark, path, v + 1, "REBUCKET",
-        changed_buckets=[], n_buckets=int(n_buckets),
-    )
-    m_publish()
-    new_manifest.version = v + 1
-    return new_manifest
+    return _attach(new_manifest, version=version)
 
 
 def vacuum_versions(
@@ -3953,7 +3721,7 @@ def restore_version(
                 sort_keys=True,
             ),
         )
-    # meta before the manifest commit point — see upsert_versioned
+    # meta before the manifest commit point — see _publish
     if commit_meta is not None:
         _write_commit_meta(spark, path, v_new, commit_meta)
     _write_commit_op(

@@ -2,6 +2,7 @@
 matched -> staging wins all columns; unmatched -> insert; re-run
 idempotence; the two strategies' documented NULL divergence."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_bigquery_to_sftp_server_spark.operators import merge
@@ -2660,34 +2661,53 @@ def test_cross_process_commit_race(spark, tmp_path):
         os.path.dirname(os.path.abspath(merge.__file__.replace("/operators", "")))
     )
     barrier = str(tmp_path / "barrier")
-    procs = {
-        w: subprocess.Popen(
-            [sys.executable, child, repo, path, w, barrier],
-            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+    # each child's stderr goes to a file (a pipe could fill and block
+    # the child while the parent waits at the barrier); its tail and
+    # the return codes go into every assertion message
+    err_paths = {w: tmp_path / f"child_{w}.err" for w in ("A", "B")}
+
+    def spawn(w):
+        with open(err_paths[w], "w") as err:  # the child keeps its copy
+            return subprocess.Popen(
+                [sys.executable, child, repo, path, w, barrier],
+                stdout=subprocess.PIPE, stderr=err, text=True,
+            )
+
+    procs = {w: spawn(w) for w in ("A", "B")}
+    outs: dict[str, str] = {}
+
+    def diagnosis() -> str:
+        return "\n".join(
+            f"child {w}: returncode={p.poll()} stdout={outs.get(w)!r}\n"
+            f"stderr tail:\n{err_paths[w].read_text()[-3000:]}"
+            for w, p in procs.items()
         )
-        for w in ("A", "B")
-    }
+
     deadline = time.time() + 180
     while not all(
         os.path.exists(f"{barrier}.{w}.ready") for w in procs
     ):
-        assert time.time() < deadline, "children never reached the barrier"
+        assert time.time() < deadline, (
+            "children never reached the barrier\n" + diagnosis()
+        )
         for p in procs.values():
-            assert p.poll() is None or p.returncode == 0
+            assert p.poll() is None or p.returncode == 0, diagnosis()
         time.sleep(0.1)
     # both children saw the SAME base version before either commits
     seen = {open(f"{barrier}.{w}.ready").read() for w in procs}
-    assert seen == {"0"}
+    assert seen == {"0"}, diagnosis()
     open(f"{barrier}.go", "w").write("1")
     results = {}
     for w, p in procs.items():
-        out, _ = p.communicate(timeout=180)
-        for line in out.splitlines():
+        outs[w], _ = p.communicate(timeout=180)
+        for line in outs[w].splitlines():
             if line.startswith("RESULT"):
                 _, w_, verdict, v = line.split()
                 results[w_] = (verdict, int(v))
-    assert sorted(r[0] for r in results.values()) == ["LOSE", "WIN"]
-    assert all(v == 1 for _, v in results.values())
+    assert sorted(r[0] for r in results.values()) == ["LOSE", "WIN"], (
+        diagnosis()
+    )
+    assert all(v == 1 for _, v in results.values()), diagnosis()
     winner = next(w for w, r in results.items() if r[0] == "WIN")
     got = {
         r.k: r.v
@@ -3082,6 +3102,24 @@ def test_commit_ts_stamp_exceeds_mixed_unstamped_chain(spark, tmp_path):
     assert after[1] < after[2]
 
 
+def _assert_files_key_sorted(path, buckets, gen, key="k"):
+    """Every parquet file of the given buckets' generation ``gen`` is
+    sorted by the table key — the order maintenance rewrites promise."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    for b in buckets:
+        d = os.path.join(path, "data", f"_kr={b}", f"_gen={gen}")
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert files, d
+        for f in files:
+            ks = pq.read_table(os.path.join(d, f), columns=[key]).column(
+                key
+            ).to_pylist()
+            assert ks == sorted(ks), (b, f, ks)
+
+
 def test_binpack_is_incremental_and_resorts_packed_files(spark, tmp_path):
     """r15 liquid-clustering contract for compact_small_generations:
     (1) INCREMENTAL — only buckets holding >= 2 sub-threshold
@@ -3138,17 +3176,7 @@ def test_binpack_is_incremental_and_resorts_packed_files(spark, tmp_path):
     assert all(gens[b] == 0 for b in untouched)
     assert all(gens[b] == out.version for b in touched)
     # (2) every packed file is sorted by the table key
-    import pyarrow.parquet as pq
-
-    for b in touched:
-        d = os.path.join(path, "data", f"_kr={b}", f"_gen={out.version}")
-        for f in os.listdir(d):
-            if not f.endswith(".parquet"):
-                continue
-            ks = pq.read_table(os.path.join(d, f), columns=["k"]).column(
-                "k"
-            ).to_pylist()
-            assert ks == sorted(ks), (b, f)
+    _assert_files_key_sorted(path, touched, out.version)
     # content: the pack changed nothing
     live = {r.k: r.v for r in merge.read_version(spark, path).collect()}
     expect = {i: i * 3 for i in range(80)}
@@ -4230,6 +4258,8 @@ def test_reorg_purge_deletion_vectors(spark, tmp_path):
     }
     for p, t in cold_before.items():
         assert cold_after[p] == t, f"clean-bucket file rewritten: {p}"
+    # the rewritten debt bucket's files come out sorted by the key
+    _assert_files_key_sorted(path, [0], man.version)
     # CDF-silent: the feed across the purge emits exactly the v1+v2
     # changes and nothing at v3
     feed = merge.table_changes(spark, path, 0)
@@ -4634,10 +4664,15 @@ def test_scoped_optimize_key_range(spark, tmp_path):
         ),
         "k", path, n_buckets=4,
     )
-    # churn in buckets 0 (keys ~1-10) and 3 (keys ~31-40)
+    # churn in buckets 0 (keys ~1-10) and 3 (keys ~31-40); one staging
+    # partition, so bucket 0's new file holds 8 before 2 and the
+    # compaction below has key order to restore
     merge.upsert_versioned_dv(
         spark, path,
-        spark.createDataFrame([(2, 222), (35, 355)], "k long, v long"), "k",
+        spark.createDataFrame(
+            [(8, 888), (2, 222), (35, 355)], "k long, v long"
+        ).coalesce(1),
+        "k",
     )
     before = {r.k: r.v for r in merge.read_version(spark, path).collect()}
 
@@ -4660,6 +4695,8 @@ def test_scoped_optimize_key_range(spark, tmp_path):
     assert {r.k: r.v for r in merge.read_version(spark, path).collect()} == before
     for p, t in cold.items():
         assert mtimes(lambda b: True)[p] == t, f"out-of-range rewrite: {p}"
+    # the compacted bucket's files come out sorted by the key
+    _assert_files_key_sorted(path, [0], man.version)
     # bucket 0's DV entries folded; bucket 3's carry
     dv = merge._read_dv(spark, path, 2)
     assert dv is not None and {r._kr for r in dv.collect()} == {3}
@@ -4675,6 +4712,7 @@ def test_scoped_optimize_key_range(spark, tmp_path):
     )
     assert man3.n_compacted_buckets == 1
     assert merge._read_dv(spark, path, man3.version) is None
+    _assert_files_key_sorted(path, [3], man3.version)
     import pytest
 
     with pytest.raises(ValueError, match="merge key"):
@@ -4770,3 +4808,123 @@ def test_carry_dv_except_matches_spark_filter(spark, tmp_path):
     # an empty frame: _read_dv returns None either way)
     merge._carry_dv_except(spark, path, got, 1, 3, [0, 2, 3])
     assert merge._read_dv(spark, path, 3) is None
+
+
+@pytest.mark.parametrize("dirname", ["a%20b", "c d"])
+def test_versioned_table_round_trips_through_file_uri(
+    spark, tmp_path, dirname
+):
+    """A ``file:`` URI names the directory Hadoop's Path reads
+    literally — ``%20`` is part of the name, not an encoded space — and
+    the pyarrow manifest paths must open that same directory. If the
+    two disagreed, the driver-side manifest would land where
+    _list_versions never looks and every commit would be invisible."""
+    import os
+
+    root = tmp_path / dirname
+    uri = f"file://{root}/t"
+    merge.versioned_layout_write(
+        spark.createDataFrame([(i, i) for i in range(10)], "k long, v long"),
+        "k", uri, 2,
+    )
+    out = merge.upsert_versioned_dv(
+        spark, uri,
+        spark.createDataFrame([(3, 33), (12, 12)], "k long, v long"), "k",
+    )
+    assert out.version == 1
+    assert merge._list_versions(spark, f"{uri}/_manifest") == [0, 1]
+    assert os.path.isfile(f"{root}/t/_manifest/v=1/_SUCCESS")
+    want = {i: i for i in range(10)}
+    want.update({3: 33, 12: 12})
+    assert {r.k: r.v for r in merge.read_version(spark, uri).collect()} == want
+    assert merge.compact_table(spark, uri, "k").version == 2
+    assert {r.k: r.v for r in merge.read_version(spark, uri).collect()} == want
+    assert merge._local_fs_path(spark, uri) == f"{root}/t"
+    # a host in the URI is not provably the local filesystem
+    assert merge._local_fs_path(spark, f"file://h{root}/t") is None
+
+
+# every versioned committer, as one call against the fixture table of
+# test_crash_before_commit_point_leaves_no_version
+_COMMITTERS = {
+    "upsert_versioned": lambda s, p: merge.upsert_versioned(
+        s, p, s.createDataFrame([(1, 100), (50, 500)], "k long, v long"), "k"
+    ),
+    "upsert_versioned_dv": lambda s, p: merge.upsert_versioned_dv(
+        s, p, s.createDataFrame([(1, 100), (50, 500)], "k long, v long"), "k"
+    ),
+    "delete_versioned": lambda s, p: merge.delete_versioned(
+        s, p, s.createDataFrame([(5,)], "k long"), "k"
+    ),
+    "merge_arms_versioned_dv": lambda s, p: merge.merge_arms_versioned_dv(
+        s, p, s.createDataFrame([(1, 100), (50, 500)], "k long, v long"),
+        "k", matched=[(None, "update")], not_matched=[(None, "insert")],
+    ),
+    "compact_table": lambda s, p: merge.compact_table(s, p, "k"),
+    "compact_small_generations": lambda s, p: merge.compact_small_generations(
+        s, p, "k", min_file_bytes=1 << 30
+    ),
+    "purge_deletion_vectors": lambda s, p: merge.purge_deletion_vectors(
+        s, p, "k"
+    ),
+    "compact_key_range": lambda s, p: merge.compact_key_range(
+        s, p, "k", 0, 15
+    ),
+    "rebucket_table": lambda s, p: merge.rebucket_table(s, p, "k", 3),
+    "add_column": lambda s, p: merge.add_column(s, p, "w", "long"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_COMMITTERS))
+def test_crash_before_commit_point_leaves_no_version(
+    monkeypatch, spark, tmp_path, name
+):
+    """Every committer publishes through one step whose last act is
+    the manifest ``_SUCCESS`` — the commit point. A crash right before
+    it (after data, DV, meta and op are written) must leave the table
+    at its old version: readers see the old contents,
+    rollback_inflight reclaims exactly the in-flight version, and the
+    next commit lands in that same slot."""
+    import os
+
+    path = str(tmp_path / "t")
+    merge.versioned_layout_write(
+        spark.createDataFrame(
+            [(i, i * 10) for i in range(40)], "k long, v long"
+        ),
+        "k", path, n_buckets=4,
+    )
+    # debt in bucket 0 — two MOR generations and a DV — so bin-packing,
+    # PURGE and the scoped OPTIMIZE all have work to commit
+    for batch in ([(1, 11), (2, 22)], [(3, 33)]):
+        merge.upsert_versioned_dv(
+            spark, path, spark.createDataFrame(batch, "k long, v long"), "k"
+        )
+    merge.delete_versioned(
+        spark, path, spark.createDataFrame([(4,)], "k long"), "k"
+    )
+    v = merge._list_versions(spark, f"{path}/_manifest")[-1]
+    before = sorted(merge.read_version(spark, path).collect())
+    real = merge._manifest_step
+
+    def crashing(*args, **kwargs):
+        collect, _ = real(*args, **kwargs)
+
+        def publish():
+            raise RuntimeError("crash before the commit point")
+
+        return collect, publish
+
+    monkeypatch.setattr(merge, "_manifest_step", crashing)
+    with pytest.raises(RuntimeError, match="before the commit point"):
+        _COMMITTERS[name](spark, path)
+    monkeypatch.undo()
+    assert merge._list_versions(spark, f"{path}/_manifest")[-1] == v
+    assert sorted(merge.read_version(spark, path).collect()) == before
+    assert merge.rollback_inflight(spark, path) == [v + 1]
+    assert not any(
+        os.path.exists(f"{path}/data/_kr={b}/_gen={v + 1}") for b in range(4)
+    )
+    out = _COMMITTERS[name](spark, path)
+    assert (out if isinstance(out, int) else out.version) == v + 1
+    assert merge._list_versions(spark, f"{path}/_manifest")[-1] == v + 1

@@ -495,6 +495,24 @@ def test_optimize_zorder_by_statement(spark, tmp_path):
     } == before
     man = spark.read.parquet(f"{path}/_manifest/v={max(ops)}")
     assert {"min_d1", "max_d1", "min_d2", "max_d2"} <= set(man.columns)
+    # every rewritten file is in Morton order of (d1, d2)
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def morton(d1, d2, bits=5):
+        return sum(
+            (((d >> b) & 1) << (b * 2 + i))
+            for i, d in enumerate((d1, d2))
+            for b in range(bits)
+        )
+
+    files = glob.glob(f"{path}/data/_kr=*/_gen={max(ops)}/*.parquet")
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["d1", "d2"]).to_pydict()
+        z = [morton(a, b) for a, b in zip(t["d1"], t["d2"])]
+        assert z == sorted(z), f
     # pruning evidence on a promoted dimension
     pruned = merge.read_version_pruned(spark, path, "d1", 0, 1)
     assert pruned.dirs_read < pruned.dirs_total
